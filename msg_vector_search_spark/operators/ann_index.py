@@ -185,21 +185,19 @@ def _write_codebooks(books: np.ndarray, path: str) -> None:
 
 
 def read_meta(path: str) -> dict:
+    """The index's meta sidecar.  Every serving and maintenance verb
+    enters through this read, so it is the index's recovery point:
+    ``sinks.recover`` over the root and both cell stores runs first."""
     from ..sources import fs
     if fs.is_remote(path):
         # remote serving reads the sidecar through the Hadoop FS API —
-        # no Spark job, no local-FS assumption (r18; the write-side
-        # heal verbs stay POSIX by design and no-op here: a remote
-        # store is read-only for this engine)
+        # no Spark job, no local-FS assumption (r18)
         from pyspark.sql import SparkSession
         spark = SparkSession.getActiveSession()
         return json.loads(fs.read_bytes(
             spark, f"{path.rstrip('/')}/{META_FILE}"))
-    # universal entry backstop (r14 review): a crash inside
-    # rebuild_index's root-level swap strands the WHOLE index as
-    # '<path>._old' — restore it before any verb touches META_FILE
-    from ..sources.sinks import heal_root
-    heal_root(path)
+    from ..sources.sinks import recover
+    recover(path, (_subdir(path, "vectors"), _subdir(path, "codes")))
     with open(os.path.join(path, META_FILE)) as f:
         return json.load(f)
 
@@ -326,20 +324,6 @@ def search_index(spark: SparkSession, path: str, qvec: list[float],
     pruning before any ADC work, and the shortlist is drawn from
     eligible rows only — filtered ANN without the recall loss of
     post-filtering a top-k."""
-    from ..sources.sinks import (_finish_pending_delete,
-                                 heal_partial_swaps, heal_root)
-
-    # serving self-heals too: a crash mid-swap in a maintenance verb
-    # strands a cell as 'cell=N._old' (silently omitted by a raw read),
-    # a crash in rebuild's root swap strands the whole index as
-    # '<path>._old', and a crash mid-erasure leaves its recorded swap
-    # plan half applied (erased rows still served from un-swapped
-    # cells) — all rolled forward here at listdir cost, closing the
-    # window between a crash and the next maintenance job
-    heal_root(path)
-    for store in (_subdir(path, "vectors"), _subdir(path, "codes")):
-        _finish_pending_delete(store)
-        heal_partial_swaps(store)
     meta = read_meta(path)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     books = load_codebooks(spark, path)
@@ -430,13 +414,6 @@ def search_index_many(spark: SparkSession, path: str,
       tools/scaling_check.py --batch (see README bench notes)."""
     from pyspark.sql import Window
 
-    from ..sources.sinks import (_finish_pending_delete,
-                                 heal_partial_swaps, heal_root)
-
-    heal_root(path)
-    for store in (_subdir(path, "vectors"), _subdir(path, "codes")):
-        _finish_pending_delete(store)
-        heal_partial_swaps(store)
     meta = read_meta(path)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     books = load_codebooks(spark, path)
@@ -553,22 +530,11 @@ def _upsert_cells(spark: SparkSession, batch: DataFrame, store: str,
     only those directories.  The sinks.py upsert economics with the
     IVF cell as the bucket.  *touched* lets a caller that already
     knows the batch's cell set (the codes store mirrors the vectors
-    store's) skip the distinct-collect job."""
-    from ..sources.sinks import (_finish_pending_delete, _swap_dir,
-                                 heal_partial_swaps)
+    store's) skip the distinct-collect job.  The caller has recovered
+    the store (:func:`read_meta`); the rewrite lands through
+    ``sinks.commit_partitions``."""
+    from ..sources.sinks import commit_partitions
 
-    # Roll a crashed erasure FORWARD before reading (r14 review): a
-    # pending _delete_pending.json means un-swapped cells still hold
-    # victim rows — merging without committing it would bake the
-    # victims back in, and the old shared '._staged' suffix meant the
-    # upsert's own staging write clobbered the erasure's staged
-    # rewrite while its manifest survived (the manifest's 'emptied'
-    # replay could then rmtree LIVE cells).  Commit the erasure, sweep
-    # pre-manifest staging orphans, then heal partial swaps.
-    if not _finish_pending_delete(store):
-        import shutil
-        shutil.rmtree(store + "._staged", ignore_errors=True)
-    heal_partial_swaps(store)  # crashed prior swap: restore before read
     if touched is None:
         touched = sorted(r[0] for r in
                          batch.select("cell").distinct().collect())
@@ -593,19 +559,7 @@ def _upsert_cells(spark: SparkSession, batch: DataFrame, store: str,
     current = (_read_cells(spark, store, touched)
                .join(F.broadcast(inc.select(key)), key, "left_anti"))
     merged = current.unionByName(inc.select(*current.columns))
-    # distinct staging suffix from the erase path's '._staged' so an
-    # upsert can never collide with an in-flight erasure's artifacts
-    # even if the roll-forward contract above is violated
-    tmp = store + "._upstaged"
-    import shutil
-    shutil.rmtree(tmp, ignore_errors=True)  # orphan of a crashed upsert
-    merged.write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    for c in touched:
-        part = f"cell={c}"
-        src = os.path.join(tmp, part)
-        if os.path.exists(src):
-            _swap_dir(src, os.path.join(store, part))
-    shutil.rmtree(tmp, ignore_errors=True)
+    commit_partitions(store, merged, touched, part_col="cell")
     return touched
 
 
@@ -632,19 +586,15 @@ def delete_index_keys(spark: SparkSession, path: str, keys: DataFrame,
 
     Crash safety: both store rewrites go through the staged-manifest
     commit (``sinks.erase_partitions``) — a crash at any point is
-    rolled forward by the next maintenance verb or self-healing read,
-    and re-running with the same key list is the documented recovery
-    path.  Cost: O(touched cells + key list), independent of index
-    size.  Returns the touched cell ids."""
-    from ..sources.sinks import (_finish_pending_delete, erase_partitions,
-                                 heal_partial_swaps)
+    rolled forward by the next verb or read, and re-running with the
+    same key list is the documented recovery path.  Cost: O(touched
+    cells + key list), independent of index size.  Returns the touched
+    cell ids."""
+    from ..sources.sinks import erase_partitions
 
     meta = read_meta(path)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     vstore, cstore = _subdir(path, "vectors"), _subdir(path, "codes")
-    for store in (vstore, cstore):
-        _finish_pending_delete(store)
-        heal_partial_swaps(store)
     keyed = (keys.select(id_col).filter(F.col(id_col).isNotNull())
              .distinct().localCheckpoint())
     if vectors is not None:
@@ -708,8 +658,7 @@ def delete_index_where(spark: SparkSession, path: str,
     O(victim cells + id/meta pages), independent of index size.
     Idempotent: a re-run finds no matching rows.  Returns the touched
     cell ids."""
-    from ..sources.sinks import (_finish_pending_delete, erase_partitions,
-                                 heal_partial_swaps)
+    from ..sources.sinks import erase_partitions
 
     from .dedup import _cc_free
 
@@ -722,9 +671,6 @@ def delete_index_where(spark: SparkSession, path: str,
             "needs the filter columns recorded at build time "
             "(build_index(..., meta_cols=...))")
     vstore, cstore = _subdir(path, "vectors"), _subdir(path, "codes")
-    for store in (vstore, cstore):
-        _finish_pending_delete(store)
-        heal_partial_swaps(store)
     victims = (spark.read.parquet(vstore)
                .filter(F.expr(predicate))
                .select(id_col, "cell").localCheckpoint())
@@ -805,21 +751,11 @@ def rebuild_index(spark: SparkSession, path: str,
     seed <-> trained in place.  After a rebuild the index is
     bit-identical to a fresh :func:`build_index` over the same rows —
     upsert-then-rebuild converges to the fresh-build state."""
-    from ..sources.sinks import (_finish_pending_delete, _swap_dir,
-                                 heal_partial_swaps, heal_root)
+    from ..sources.sinks import _swap_dir
 
-    heal_root(path)  # a crashed prior rebuild stranded the root
     meta = read_meta(path)
     if trained is None:
         trained = meta["trained"]
-    # roll a crashed erasure FORWARD before treating the vectors store
-    # as the source of truth (r14 review): un-swapped cells still hold
-    # victim rows, and a rebuild that reads them bakes the victims
-    # into the fresh index AND discards the pending manifest with the
-    # old directories — the erasure would silently never complete
-    for store in (_subdir(path, "vectors"), _subdir(path, "codes")):
-        _finish_pending_delete(store)
-        heal_partial_swaps(store)
     shutil.rmtree(path + "._rebuild", ignore_errors=True)  # stale stage
     vecs = (spark.read.parquet(_subdir(path, "vectors")).drop("cell")
             .localCheckpoint())  # detach from the dirs the swap replaces
@@ -996,19 +932,8 @@ def index_maintenance_stats(spark: SparkSession, path: str,
     policy evaluations; when a persist is attempted the returned dict
     carries ``backfill_persisted`` (False = the write-through failed,
     e.g. a read-only store — surfaced, not swallowed)."""
-    from ..sources.sinks import _finish_pending_delete, heal_partial_swaps
-
     meta = read_meta(path)
-    # heal before counting (r14 review): a stale 'cell=N._old' leftover
-    # would be discovered as its own partition value and double-count
-    # that cell's rows — inflated growth/skew drive the WRITE-path
-    # rebuild decision (maintain_index).  Same roll-forward the serving
-    # reads do; committing a crashed erasure from an observer is the
-    # established self-heal contract (search_index does it on every
-    # call), distinct from the meta write-through that stays opt-in.
     cstore = _subdir(path, "codes")
-    _finish_pending_delete(cstore)
-    heal_partial_swaps(cstore)
     counts = [r["n"] for r in
               (spark.read.parquet(cstore)
                .groupBy("cell").agg(F.count(F.lit(1)).alias("n"))

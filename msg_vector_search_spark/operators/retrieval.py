@@ -176,10 +176,17 @@ def _read_text_meta(path: str, id_col: str = "doc_id",
     the generation to 0 would make every existing tombstone a no-op
     and every new delete ineffective (rows at gen>0 would all pass the
     gen > upto_gen filter) — a data-integrity failure worth stopping
-    on, not guessing through."""
+    on, not guessing through.
+
+    Every verb of the index enters through this read, so it is the
+    index's recovery point: ``sinks.recover`` over the root (whose
+    postings/doclen stores are swapped whole by compaction) and then
+    the postings store (whose term buckets a stopword prune commits)
+    runs first on local paths."""
     import json
 
     from ..sources import fs
+    from ..sources.sinks import recover
 
     if fs.is_remote(path):
         # remote serving reads the sidecar through the Hadoop FS API —
@@ -209,6 +216,7 @@ def _read_text_meta(path: str, id_col: str = "doc_id",
                 "disarm tombstones) — restore or rebuild the index"
             ) from e
 
+    recover(path, (path, os.path.join(path, "postings")))
     try:
         with open(os.path.join(path, TEXT_META)) as f:
             return json.load(f)
@@ -628,9 +636,6 @@ def retention_sweep_inverted_index(spark, path: str, cutoff,
     index that never recorded age cannot self-expire, and raising
     beats silently sweeping nothing.  Returns ``{"tombstoned": n,
     "cutoff": str(cutoff)}``."""
-    from ..sources.sinks import heal_partial_swaps
-
-    heal_partial_swaps(path)  # same self-heal as the serving reads
     meta = _read_text_meta(path)
     if ts_col not in tuple(meta.get("meta_cols", ())):
         raise ValueError(
@@ -740,15 +745,8 @@ def prune_inverted_index_stopwords(spark, path: str,
     stopword list is driver-bounded by construction (terms above half
     the corpus are a handful).  Returns ``{"pruned": [terms],
     "df_cut": n, "n_docs": N}``."""
-    from ..sources.sinks import (_finish_pending_delete,
-                                 erase_partitions, heal_partial_swaps)
+    from ..sources.sinks import erase_partitions
 
-    heal_partial_swaps(path)
-    # roll forward a crashed prior prune before reading (each bucket
-    # dir swaps atomically, so a half-committed prune serves each
-    # term either fully pruned or fully present — benign — but the
-    # next maintenance op must finish the recorded plan first)
-    _finish_pending_delete(os.path.join(path, "postings"))
     meta = _read_text_meta(path)
     id_col = meta["id_col"]
     tomb = _tombstone_frame(spark, path, id_col)
@@ -794,9 +792,8 @@ def compact_inverted_index(spark, path: str) -> dict:
     too)."""
     import shutil
 
-    from ..sources.sinks import _swap_dir, heal_partial_swaps
+    from ..sources.sinks import _swap_dir
 
-    heal_partial_swaps(path)
     meta = _read_text_meta(path)
     id_col = meta["id_col"]
     tomb = _tombstone_frame(spark, path, id_col)
@@ -838,9 +835,6 @@ def inverted_index_stats(spark, path: str) -> DataFrame:
     terms, postings rows — plus the tombstone backlog that schedules
     compaction.  Aggregates ride partial aggregation (one row per
     executor); no text is read."""
-    from ..sources.sinks import heal_partial_swaps
-
-    heal_partial_swaps(path)
     meta = _read_text_meta(path)
     id_col = meta["id_col"]
     tomb = _tombstone_frame(spark, path, id_col)
@@ -880,7 +874,7 @@ def search_inverted_index(spark, path: str, terms: list[str],
     tombstone are filtered by a broadcast join against the (compaction-
     bounded) tombstone set, and corpus stats (N, Σdl, df) count only
     live rows — so post-maintenance serving equals a fresh scan of the
-    merged truth.  Reads self-heal stranded swap leftovers first.
+    merged truth.  Reads recover first (:func:`_read_text_meta`).
 
     Scale: the postings read is O(matching docs x terms), the stats
     pass is one partial-aggregate row each over postings and doclen,
@@ -892,9 +886,8 @@ def search_inverted_index(spark, path: str, terms: list[str],
     the doclen join and every statistic (N, Σdl, per-term df) is
     recounted over eligible docs only — bit-identical to serving an
     index built on the slice."""
-    from ..sources.sinks import _read_buckets, heal_partial_swaps
+    from ..sources.sinks import _read_buckets
 
-    heal_partial_swaps(path)
     meta = _read_text_meta(path, id_col=id_col, n_buckets=n_buckets)
     id_col = meta["id_col"]
     n_buckets = int(meta["n_buckets"])
@@ -1021,10 +1014,9 @@ def search_inverted_index_many(spark, path: str, queries: dict,
     pinned."""
     from pyspark.sql import Window
 
-    from ..sources.sinks import _read_buckets, heal_partial_swaps
+    from ..sources.sinks import _read_buckets
     from .dedup import _cc_free
 
-    heal_partial_swaps(path)
     meta = _read_text_meta(path, n_buckets=n_buckets)
     id_col = meta["id_col"]
     n_buckets = int(meta["n_buckets"])

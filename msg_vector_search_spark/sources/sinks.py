@@ -37,10 +37,20 @@ format-level MERGE with file-level pruning; the jars are not in this
 environment so the bucket-partitioned dedup-rewrite is the
 implementation and the MERGE path is documented.
 
+Crash safety: every partition rewrite (incremental upsert, erasure,
+TTL sweep, compaction — and the ANN index's cell merges and erasures)
+goes through ONE commit, :func:`commit_partitions`: stage the rewrite
+under ``<store>._staged``, record the plan in ``_delete_pending.json``,
+replay the plan.  A crash before the plan lands leaves the store
+untouched; a crash after it is rolled forward whole by
+:func:`recover`, the one entry point every read and write verb of
+every persisted store calls first.
+
 Deployment note: the maintenance WRITE verbs here (directory swaps,
-swap healing, file counting, manifest staging) use ``os``/``shutil``
-— a POSIX store directory, matching the sandbox-local design.  The
-READ-path existence probes are scheme-dispatching (``sources/fs.py``):
+recovery, file counting, manifest staging) use ``os``/``shutil``
+— a POSIX store directory, matching the sandbox-local design, and
+:func:`recover` is a no-op on ``scheme://`` paths.  The READ-path
+existence probes are scheme-dispatching (``sources/fs.py``):
 remote URIs route through the Hadoop FileSystem API so the pruned
 listing holds on object storage.  The DataFrame read/merge/write
 plans are cluster-agnostic; on HDFS or an object store the write
@@ -52,6 +62,7 @@ transaction log plays the manifest's role.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
 
@@ -59,6 +70,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import fs as fs_probe
+
+log = logging.getLogger(__name__)
 
 #: Partition column of the upsert store layout.  Internal — readers go
 #: through :func:`read_store`, which drops it.
@@ -76,8 +89,8 @@ DEFAULT_RANGE_WIDTH = 4096
 #: underscore keeps Spark/Hadoop parquet listing from treating it as
 #: data (same convention as ``_SUCCESS``).
 LAYOUT_META = "_layout.json"
-#: Marker recording an in-flight erasure's swap plan (stage-then-commit;
-#: see :func:`delete_keys` / :func:`_finish_pending_delete`).
+#: Marker recording an in-flight partition commit's swap plan (see
+#: :func:`commit_partitions` / :func:`_finish_pending_delete`).
 DELETE_MANIFEST = "_delete_pending.json"
 
 
@@ -197,7 +210,7 @@ def _swap_dir(src: str, dst: str) -> None:
 
 def heal_root(path: str) -> bool:
     """Roll back a ROOT directory stranded mid-:func:`_swap_dir` by a
-    crash (r14 review): a whole-directory swap (e.g. rebuild_index's
+    crash: a whole-directory swap (e.g. rebuild_index's
     ``_swap_dir(tmp, path)``) that dies between its two renames leaves
     the live tree as ``<path>._old`` with nothing at ``path`` —
     :func:`heal_partial_swaps` only scans for strays INSIDE a store,
@@ -211,21 +224,21 @@ def heal_root(path: str) -> bool:
         return False
     if os.path.exists(path):
         shutil.rmtree(old, ignore_errors=True)
+        log.warning("recover: swept stale %s left by a completed swap",
+                    old)
         return False
     os.rename(old, path)
+    log.warning("recover: restored %s from %s", path, old)
     return True
 
 
 def heal_partial_swaps(store: str) -> list:
     """Roll back directories stranded mid-:func:`_swap_dir` by a crash:
     a ``<part>._old`` whose base directory is MISSING means the crash
-    hit between the two renames — the live data is in ``._old``, and a
-    subsequent read of the store would silently drop that partition
-    (the merge paths read the store as input, so the loss would
-    propagate into the rewrite).  Restore those; delete ``._old``
-    dirs whose base EXISTS (crash after the second rename — the swap
-    completed, the leftover is stale).  Called by every store-merging
-    verb before it reads; returns the restored partition names."""
+    hit between the two renames — the live data is in ``._old``.
+    Restore those; delete ``._old`` dirs whose base EXISTS (crash
+    after the second rename — the swap completed, the leftover is
+    stale).  Returns the restored partition names."""
     restored = []
     if not os.path.isdir(store):
         return restored
@@ -236,24 +249,69 @@ def heal_partial_swaps(store: str) -> list:
         old = os.path.join(store, entry)
         if os.path.exists(base):
             shutil.rmtree(old, ignore_errors=True)
+            log.warning("recover: swept stale %s left by a completed "
+                        "swap", old)
         else:
             os.rename(old, base)
             restored.append(entry[:-len("._old")])
+            log.warning("recover: restored %s from %s", base, old)
     return restored
+
+
+def recover(root: str, stores: tuple | list | None = None) -> None:
+    """Bring a persisted store back to a committed state after a crash
+    — the one recovery entry point every read and write verb of the
+    primary store, the ANN index (``stores`` = its vectors and codes
+    stores) and the text index (``stores`` = its root, then its
+    postings store) calls before touching data.  *stores* defaults to
+    ``(root,)``.  Repairs are logged at WARNING; a store with no crash
+    artifacts costs a stat per store and one listing each.
+
+    The order is the contract:
+
+    1. :func:`heal_root` first.  A crash between a whole-directory
+       swap's two renames (first write, migration, rebucket, index
+       rebuild) leaves the live tree at ``<root>._old`` and nothing at
+       ``root``.  Unrestored, an upsert's existence check reads False,
+       its first-write branch replaces the store with just the batch,
+       and the ``._old`` holding every prior row is later swept as
+       stale — total data loss from one crash plus one upsert.
+    2. Per store, outer before inner, :func:`_finish_pending_delete`
+       rolls a recorded partition commit FORWARD.  It must precede the
+       swap heal: healing around a half-applied commit would resurrect
+       rows an erasure removed (the replay later deletes them again,
+       over data written in between), a merge reading the un-swapped
+       partitions would bake erased rows back in, and an index rebuild
+       reading them would bake them into the fresh index while
+       discarding the plan with the old directories.
+    3. :func:`heal_partial_swaps` then restores any directory stranded
+       as ``<name>._old`` outside a recorded plan — e.g. the text
+       index's ``postings`` after a crashed whole-store compaction
+       swap.  A read would silently drop it; an upsert would write a
+       fresh ``postings`` beside it, and the next heal would sweep the
+       stranded one as stale.  Stale ``._old`` leftovers are swept
+       (discovered as extra partition values, they double-count rows
+       in occupancy statistics).
+
+    Reads recover too, not just the merge verbs, so the window between
+    a crash and the next maintenance job never serves a store with a
+    dropped partition or an erased row.  No-op on ``scheme://`` paths:
+    the write verbs are POSIX-only, so a remote store is read-only for
+    this engine and cannot hold crash artifacts of its own making."""
+    if fs_probe.is_remote(root):
+        return
+    heal_root(root)
+    for store in stores or (root,):
+        if _finish_pending_delete(store):
+            log.warning("recover: rolled forward the pending commit "
+                        "recorded in %s", store)
+        heal_partial_swaps(store)
 
 
 def read_store(spark: SparkSession, path: str) -> DataFrame:
     """Read an upsert store, hiding the internal bucket layout column.
-
-    Reads self-heal first: a crash mid-:func:`_swap_dir` strands a
-    partition as ``<part>._old`` (silently missing from a raw read)
-    and a crash mid-erasure leaves the recorded swap plan half
-    applied — both are rolled forward here, not just in the merge
-    verbs, so the window between a crash and the next maintenance
-    job never serves a store with a dropped partition."""
-    heal_root(path)
-    _finish_pending_delete(path)
-    heal_partial_swaps(path)
+    Recovers first (:func:`recover`)."""
+    recover(path)
     df = spark.read.parquet(path)
     return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
 
@@ -297,11 +355,10 @@ def upsert_parquet(spark: SparkSession, incoming: DataFrame, path: str,
     written.  With ``layout="range"`` (arrival-ordered integer keys,
     the ingest path) a batch of B keys touches O(B / range_width)
     directories however large the store is — the module docstring has
-    the full cost model.  A crash mid-swap leaves some buckets new and
-    some old — each bucket is internally consistent (last-wins holds
-    per key because a key never spans buckets); a table format
-    (Delta/Iceberg MERGE) is the production answer for multi-partition
-    atomicity.
+    the full cost model.  The touched buckets land through
+    :func:`commit_partitions`: a crash before its plan is recorded
+    leaves the store as it was, a crash after it is rolled forward
+    across every touched bucket by the next :func:`recover`.
 
     With ``count_new=True`` the call returns how many incoming keys
     did NOT already exist in the store — computed as a key-projected
@@ -323,19 +380,8 @@ def upsert_parquet(spark: SparkSession, incoming: DataFrame, path: str,
     written before this guard — takes the one-time migration path
     below, which re-maps everything and records the layout.
     """
-    # restore a root stranded by a crashed migration/rebucket swap
-    # FIRST (r14 review): without it the exists check below reads
-    # False, the first-write branch replaces the store with just this
-    # batch, and the '._old' holding every prior row is later swept
-    # as a stale leftover — total data loss from one crash + upsert
-    heal_root(path)
+    recover(path)
     exists = os.path.exists(path)
-    if exists:
-        # roll any in-flight erasure FORWARD first: healing around its
-        # half-applied swaps would resurrect rows the manifest replay
-        # later deletes again — over data written in between
-        _finish_pending_delete(path)
-        heal_partial_swaps(path)
     meta = _read_layout(path) if exists else None
     incoming = incoming.filter(F.col(key).isNotNull())
     if meta is None:
@@ -390,28 +436,22 @@ def upsert_parquet(spark: SparkSession, incoming: DataFrame, path: str,
         n_new = (inc.select(key).distinct()
                  .join(current.select(key), key, "left_anti").count())
     merged = current.unionByName(inc, allowMissingColumns=True)
-    deduped = _dedup_last_wins_bucketed(merged, key, order_col)
-    tmp = path + "._staged"
-    deduped.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-    for b in touched:
-        part = f"{BUCKET_COL}={b}"
-        src = os.path.join(tmp, part)
-        if os.path.exists(src):
-            _swap_dir(src, os.path.join(path, part))
-    shutil.rmtree(tmp)
+    commit_partitions(path, _dedup_last_wins_bucketed(merged, key,
+                                                      order_col), touched)
     return n_new
 
 
 def _finish_pending_delete(path: str) -> bool:
-    """Commit (or crash-recover) a staged erasure: replay the swap
-    plan recorded in ``_delete_pending.json``.  Every step is
+    """Commit (or crash-recover) a staged partition rewrite: replay the
+    swap plan :func:`commit_partitions` recorded in
+    ``_delete_pending.json``.  Every step is
     idempotent against every crash point of a previous attempt —
     a bucket already swapped has no staged dir left and is skipped; a
     half-finished ``_swap_dir`` (``._old`` present) is rolled forward;
     a bucket in the manifest's ``emptied`` list has its directory
     removed.  The manifest is deleted LAST, so the store is back to
-    "no erasure in flight" only once every bucket is final.  Returns
-    True if a pending erasure was committed."""
+    "no commit in flight" only once every bucket is final.  Returns
+    True if a pending plan was committed."""
     mpath = os.path.join(path, DELETE_MANIFEST)
     if not os.path.exists(mpath):
         return False
@@ -425,6 +465,8 @@ def _finish_pending_delete(path: str) -> bool:
         # bricking every read path that now calls this first.
         os.remove(mpath)
         shutil.rmtree(path + "._staged", ignore_errors=True)
+        log.warning("recover: swept the unreadable %s and its staging",
+                    mpath)
         return False
     # the manifest records its own partition column, so recovery needs
     # no caller knowledge of the store's layout (the ANN index erasure
@@ -463,31 +505,20 @@ def delete_keys(spark: SparkSession, path: str, key: str,
     directory removed (a swap-only loop would silently resurrect the
     deleted rows).  Returns the touched bucket ids.
 
-    Failure semantics: stage-then-commit.  The full anti-joined
-    rewrite is staged first, then a manifest (``_delete_pending.json``
-    listing the swap plan) is written, and only then are bucket
-    directories swapped — by :func:`_finish_pending_delete`, whose
-    steps are individually idempotent.  A crash before the manifest
-    write leaves the store untouched (orphan staging is swept on the
-    next call); a crash after it leaves a recorded in-flight erasure
-    that the NEXT ``delete_keys`` (or ``read_store``-side tooling
-    calling ``_finish_pending_delete``) rolls forward before doing
-    anything else.  Re-running with the same key list is therefore the
-    documented recovery path and is a no-op on completed buckets.
+    Failure semantics: the rewrite lands through
+    :func:`commit_partitions`.  A crash before its plan is recorded
+    leaves the store untouched; a crash after it is rolled forward by
+    the next verb or read (:func:`recover`).  Re-running with the same
+    key list is a no-op on completed buckets.
 
     Scale: cost is O(touched buckets + key list), independent of store
     size; the key list is dimension-sized (it arrives as a DataFrame
     and is used as a broadcast anti-join build side, never collected).
     """
-    heal_root(path)
+    recover(path)
     meta = _read_layout(path)
     if meta is None:
         raise ValueError(f"no layout metadata at {path}; not a store")
-    if not _finish_pending_delete(path):
-        # no pending erasure: sweep staging orphaned by a crash that
-        # predates its manifest (the store itself is untouched then)
-        shutil.rmtree(path + "._staged", ignore_errors=True)
-    heal_partial_swaps(path)  # strays from crashed upsert/compact swaps
     keyed = (keys.select(key).filter(F.col(key).isNotNull()).distinct()
              .withColumn(BUCKET_COL, _bucket_expr(key, meta)))
     buckets = [r[0] for r in
@@ -545,32 +576,49 @@ def _read_buckets(spark: SparkSession, path: str, buckets: list,
     return spark.read.parquet(path).filter(F.lit(False))
 
 
+def commit_partitions(path: str, staged: DataFrame | None,
+                      touched: list, part_col: str = BUCKET_COL) -> None:
+    """The one partition commit of every persisted store: replace the
+    *touched* ``<part_col>=<b>`` directories of *path* with the rows of
+    *staged* (a DataFrame carrying *part_col*, or None when every
+    touched partition is dropped whole).  The rewrite is staged under
+    ``<path>._staged``; the plan — touched partitions, and the ones
+    the staging left empty, whose directories are removed — is
+    recorded atomically in :data:`DELETE_MANIFEST`; then
+    :func:`_finish_pending_delete` replays it.  The commit IS the
+    recovery routine: a crash before the plan lands leaves *path*
+    untouched (the orphaned staging is cleared by the next commit),
+    a crash after it is rolled forward across every touched partition
+    by :func:`recover`.  Callers must have recovered *path* first."""
+    tmp = path + "._staged"
+    shutil.rmtree(tmp, ignore_errors=True)
+    if staged is not None:
+        staged.write.mode("overwrite").partitionBy(part_col).parquet(tmp)
+    emptied = [b for b in touched
+               if not os.path.exists(os.path.join(tmp, f"{part_col}={b}"))]
+    _atomic_write_json(os.path.join(path, DELETE_MANIFEST),
+                       {"touched": touched, "emptied": emptied,
+                        "part_col": part_col})
+    _finish_pending_delete(path)
+
+
 def erase_partitions(spark: SparkSession, path: str, key: str,
                      keys: DataFrame, touched: list,
                      part_col: str = BUCKET_COL) -> list:
-    """The staged anti-join erasure shared by :func:`delete_keys` and
-    the materialized-index erase verbs (ANN cells, postings term
-    buckets): read ONLY the *touched* partition directories, anti-join
-    the broadcast key set, stage the rewrite, record the swap plan in
-    the manifest (carrying *part_col* so recovery is layout-blind),
-    then commit via :func:`_finish_pending_delete` — every crash point
-    is recoverable by re-running, and a partition left empty has its
+    """The anti-join erasure shared by :func:`delete_keys` and the
+    materialized-index erase verbs (ANN cells, postings term buckets):
+    read ONLY the *touched* partition directories, anti-join the
+    broadcast key set, and land the rewrite through
+    :func:`commit_partitions` — a partition left empty has its
     directory removed rather than silently resurrecting rows on the
-    next overwrite.  Callers must have healed/rolled-forward the store
-    first (the public verbs do)."""
+    next overwrite.  Callers must have recovered the store first (the
+    public verbs do)."""
     if not touched:
         return []
     current = _read_buckets(spark, path, touched,
                             part_col=part_col)  # O(touched) listing
     kept = current.join(F.broadcast(keys.select(key)), key, "left_anti")
-    tmp = path + "._staged"
-    kept.write.mode("overwrite").partitionBy(part_col).parquet(tmp)
-    emptied = [b for b in touched
-               if not os.path.exists(os.path.join(tmp, f"{part_col}={b}"))]
-    manifest = {"touched": touched, "emptied": emptied,
-                "part_col": part_col}
-    _atomic_write_json(os.path.join(path, DELETE_MANIFEST), manifest)
-    _finish_pending_delete(path)  # the commit IS the recovery routine
+    commit_partitions(path, kept, touched, part_col)
     return touched
 
 
@@ -593,10 +641,8 @@ def retention_sweep(spark: SparkSession, path: str, cutoff,
       no read);
     - min(ts) >= cutoff -> untouched (never opened);
     - straddling (or stats missing / NULL-bearing) -> the ONLY buckets
-      rewritten, through the same staged-manifest commit as the key
-      erasure (:func:`_finish_pending_delete` replays it after any
-      crash; re-running the sweep with the same cutoff is the
-      documented recovery and a no-op on completed buckets).
+      rewritten.  Drops and rewrites land as one
+      :func:`commit_partitions`, rolled forward after any crash.
 
     On a time-correlated store the rewrite set is O(1) boundary
     buckets regardless of store size or retention depth; cost is
@@ -611,12 +657,9 @@ def retention_sweep(spark: SparkSession, path: str, cutoff,
     """
     import datetime as _dt
 
-    heal_root(path)
+    recover(path)
     if _read_layout(path) is None:
         raise ValueError(f"no layout metadata at {path}; not a store")
-    if not _finish_pending_delete(path):
-        shutil.rmtree(path + "._staged", ignore_errors=True)
-    heal_partial_swaps(path)
 
     def _epoch_us(v) -> int | None:
         """Normalize a pyarrow footer stat / python datetime to epoch
@@ -711,19 +754,11 @@ def retention_sweep(spark: SparkSession, path: str, cutoff,
         return {"dropped": [], "rewritten": [], "kept": kept_dirs,
                 "cutoff": str(cutoff)}
 
-    emptied = list(drop)
+    kept = None
     if rewrite:
-        current = _read_buckets(spark, path, rewrite)  # O(touched) listing
         keep_pred = (F.col(ts_col) >= F.lit(cutoff)) | F.col(ts_col).isNull()
-        kept = current.filter(keep_pred)
-        tmp = path + "._staged"
-        kept.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-        emptied += [b for b in rewrite if not os.path.exists(
-            os.path.join(tmp, f"{BUCKET_COL}={b}"))]
-    manifest = {"touched": sorted(rewrite + drop), "emptied": emptied,
-                "part_col": BUCKET_COL}
-    _atomic_write_json(os.path.join(path, DELETE_MANIFEST), manifest)
-    _finish_pending_delete(path)
+        kept = _read_buckets(spark, path, rewrite).filter(keep_pred)
+    commit_partitions(path, kept, sorted(rewrite + drop))
     return {"dropped": sorted(drop), "rewritten": sorted(rewrite),
             "kept": kept_dirs, "cutoff": str(cutoff)}
 
@@ -769,24 +804,17 @@ def compact_store(spark: SparkSession, path: str,
     directories (a filesystem operation, no data read), rewrite ONLY
     the fragmented ones — each shrunk to one file via a shuffle keyed
     on the bucket column that moves just the fragmented buckets'
-    rows — and swap directories per bucket.  Untouched buckets are
-    never read.  Cost: O(fragmented bytes), independent of store size;
+    rows — and land them through :func:`commit_partitions`.  Untouched
+    buckets are never read.  Cost: O(fragmented bytes), independent of store size;
     contents are byte-for-byte the same rows (pinned by the
     ``store_compact`` oracle).
 
     Returns ``{"compacted": [bucket ids], "files_before": n,
     "files_after": m}``.
     """
-    heal_root(path)  # a crashed root swap strands the whole store
+    recover(path)
     if part_col == BUCKET_COL and _read_layout(path) is None:
         raise ValueError(f"no layout metadata at {path}; not a store")
-    if part_col == BUCKET_COL:
-        _finish_pending_delete(path)  # erasure first, then swap healing
-    heal_partial_swaps(path)
-    # a crash mid-compaction orphans the staging sibling; the store
-    # itself is intact (swaps happen only after the full staged write),
-    # so the leftover is dead bytes — sweep it before staging anew
-    shutil.rmtree(path + "._compact", ignore_errors=True)
 
     def _partfiles(d: str) -> list[str]:
         return [f for f in os.listdir(d)
@@ -813,20 +841,14 @@ def compact_store(spark: SparkSession, path: str,
     touched = sorted(frag)
     current = _read_buckets(spark, path, touched,
                             part_col=part_col)  # O(touched) listing
-    tmp = path + "._compact"
-    (current.repartition(len(touched), F.col(part_col))
-     .write.mode("overwrite").partitionBy(part_col).parquet(tmp))
-    after = 0
-    for b in touched:
-        part = f"{part_col}={b}"
-        src = os.path.join(tmp, part)
-        if os.path.exists(src):
-            _swap_dir(src, os.path.join(path, part))
-            after += len(_partfiles(os.path.join(path, part)))
-    shutil.rmtree(tmp, ignore_errors=True)
+    commit_partitions(path, current.repartition(len(touched),
+                                                F.col(part_col)),
+                      touched, part_col)
+    dirs = [os.path.join(path, f"{part_col}={b}") for b in touched]
     return {"compacted": touched,
             "files_before": sum(frag.values()),
-            "files_after": after}
+            "files_after": sum(len(_partfiles(d)) for d in dirs
+                               if os.path.isdir(d))}
 
 
 def write_dimension(df: DataFrame, path: str, fmt: str = "parquet") -> None:

@@ -1320,3 +1320,63 @@ def test_many_serve_matches_singles_on_auto_sized_layout(spark,
         for r in many.collect():
             got.setdefault(r["qid"], set()).add((r["doc_id"], r["bm25"]))
         assert got == {k: v for k, v in singles.items() if v}
+
+
+def test_text_search_rolls_forward_crashed_stopword_prune(spark, tmp_path,
+                                                          monkeypatch):
+    """A crash right after the prune commit's first rename-out leaves
+    a term bucket at 'postings/tb=N._old' plus a pending plan.  A plain
+    search must roll the plan forward before reading — the docs whose
+    terms share the stopword's bucket must not drop out of serving."""
+    import os
+
+    from msg_vector_search_spark.sources import sinks
+
+    docs = _mini_corpus(spark, [(i, f"zstop doc{i}") for i in range(40)])
+    crashed, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    for path in (crashed, clean):
+        retrieval.build_inverted_index(docs, path, n_buckets=8)
+    retrieval.prune_inverted_index_stopwords(spark, clean)
+
+    real_rename = os.rename
+
+    def crash_after_rename_out(src, dst):
+        real_rename(src, dst)
+        if str(dst).endswith("._old"):
+            raise RuntimeError("simulated crash after rename-out")
+
+    monkeypatch.setattr(os, "rename", crash_after_rename_out)
+    with pytest.raises(RuntimeError, match="rename-out"):
+        retrieval.prune_inverted_index_stopwords(spark, crashed)
+    monkeypatch.undo()
+    postings = os.path.join(crashed, "postings")
+    assert any(e.endswith("._old") for e in os.listdir(postings))
+
+    terms = [f"doc{i}" for i in range(40)]
+    got = _scores(retrieval.search_inverted_index(spark, crashed, terms))
+    assert len(got) == 40
+    assert got == _scores(retrieval.search_inverted_index(spark, clean,
+                                                          terms))
+    assert not os.path.exists(os.path.join(postings, sinks.DELETE_MANIFEST))
+
+
+def test_text_upsert_after_crashed_compaction_keeps_postings(spark,
+                                                             tmp_path):
+    """A crash between compaction's two renames strands 'postings' as
+    'postings._old' (the state test_text_search_heals_stranded_swap
+    fabricates).  An upsert arriving next must restore it first: a
+    fresh 'postings' beside the stranded one would make the next heal
+    sweep every prior posting as a stale leftover."""
+    import os
+
+    full = _mini_corpus(spark, [(i, f"alpha doc{i}") for i in range(10)])
+    path = str(tmp_path / "idx")
+    retrieval.build_inverted_index(full, path, n_buckets=8)
+    pdir = os.path.join(path, "postings")
+    os.rename(pdir, pdir + "._old")
+
+    retrieval.upsert_inverted_index(
+        _mini_corpus(spark, [(50, "alpha fifty")]), path)
+    got = _scores(retrieval.search_inverted_index(spark, path, ["alpha"]))
+    assert sorted(got) == [*range(10), 50]
+    assert not os.path.exists(pdir + "._old")
