@@ -23,6 +23,7 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from .plans import driver_serve
 from .plans import ingest as ingest_plan
 from .plans import search as search_plan
 from .plans import stats as stats_plan
@@ -262,9 +263,17 @@ class Engine:
         serves vectors only).  Returns ``[{message_id, score}]``
         ranked by score then id.  Served from the INDEX alone (postings
         + doclen + tombstones), never the store — which is exactly why
-        retention must tombstone it (see :meth:`apply_retention`)."""
+        retention must tombstone it (see :meth:`apply_retention`).
+        Served on the driver when the index files fit
+        (``plans/driver_serve.py``), else by the Spark plan."""
         if not self.ensure_text_index():
             return []
+        try:
+            return driver_serve.search_text(
+                self.spark, self.text_index_dir, terms, limit,
+                require_all=require_all)
+        except driver_serve.NotServable:
+            pass
         from .operators import retrieval
         rows = (retrieval.search_inverted_index(
             self.spark, self.text_index_dir, terms,
@@ -277,41 +286,55 @@ class Engine:
     def search_hybrid(self, query: str, limit: int = 30,
                       terms: list[str] | None = None) -> dict:
         """Hybrid serving across the engine's TWO surfaces: the query
-        embeds once driver-side for the ANN leg, tokenizes (or takes
-        explicit *terms*) for the BM25 leg, both legs serve from their
-        persisted indexes in one pass (``retrieval.hybrid_serve_many``
-        at Q=1 — two index reads, each leg k-bounded), and
-        reciprocal-rank fusion ranks the union.  Extension verb — the
+        embeds once driver-side for the ANN leg, is cleaned and
+        tokenized like the stored messages (or takes explicit *terms*)
+        for the BM25 leg, both legs serve from their persisted indexes
+        in one pass (``retrieval.hybrid_serve_many`` at Q=1 — two index
+        reads, each leg k-bounded; on the driver when the files fit,
+        ``driver_serve.hybrid_results``), and reciprocal-rank fusion
+        ranks the union.  Extension verb — the
         reference serves vectors only; a production retrieval tier
         almost always fuses keyword and vector legs.  Requires both
         index_dir and text_index_dir (built on demand from the store).
         Returns the reference-shaped envelope with ``rrf`` /
         ``rank_kw`` / ``rank_vec`` per result."""
         from . import embed
+        from .functions import analysis, textops
         from .operators import retrieval
         if not (self.ensure_index() and self.ensure_text_index()):
             return {"status": "error",
                     "message": "hybrid serving needs index_dir and "
                                "text_index_dir (and an ingested store)"}
         if terms is None:
-            terms = [t for t in query.lower().split() if t]
+            # the query goes through the pipeline stored messages went
+            # through (clean_text, then the index tokenizer's ASCII
+            # whitespace split): a word pair joined by a non-breaking
+            # or thin space is one stored token, and matches as one
+            terms = [t for t in analysis.py_tokens(
+                textops.py_clean_text(query)) if t]
         t0 = time.time()
-        fused = retrieval.hybrid_serve_many(
-            self.spark, self.text_index_dir, self.index_dir,
-            {0: {"terms": terms,
-                 "qvec": embed.embed_query_vector(query)}},
-            leg_k=max(limit, 50), k=limit,
-            nprobe=self.nprobe, shortlist=self.shortlist)
-        # the fusion's output id column is always named doc_id
-        # (hybrid_serve_many aliases both legs' recorded id to it);
-        # surface it under the engine's key name
-        rows = [dict(r.asDict(), message_id=r["doc_id"])
-                for r in fused.collect()]
+        qvec = embed.embed_query_vector(query)
+        try:
+            results = driver_serve.hybrid_results(
+                self.spark, self.text_index_dir, self.index_dir, terms,
+                qvec, leg_k=max(limit, 50), k=limit, nprobe=self.nprobe,
+                shortlist=self.shortlist)
+        except driver_serve.NotServable:
+            fused = retrieval.hybrid_serve_many(
+                self.spark, self.text_index_dir, self.index_dir,
+                {0: {"terms": terms, "qvec": qvec}},
+                leg_k=max(limit, 50), k=limit,
+                nprobe=self.nprobe, shortlist=self.shortlist)
+            # the fusion's output id column is always named doc_id
+            # (hybrid_serve_many aliases both legs' recorded id to it);
+            # surface it under the engine's key name
+            rows = [dict(r.asDict(), message_id=r["doc_id"])
+                    for r in fused.collect()]
+            results = [{k: v for k, v in d.items()
+                        if k not in ("qid", "doc_id")}
+                       for d in sorted(rows, key=lambda d: (
+                           -d["rrf"], d["message_id"]))]
         ms = round((time.time() - t0) * 1000, 1)
-        results = [{k: v for k, v in d.items()
-                    if k not in ("qid", "doc_id")}
-                   for d in sorted(rows, key=lambda d: (-d["rrf"],
-                                                        d["message_id"]))]
         return {"status": "success", "results": results,
                 "metadata": {"total_results": len(results),
                              "query": query, "terms": terms,
@@ -576,23 +599,56 @@ class Engine:
                            conversation_type: str | None,
                            session_id: str | None) -> dict:
         """Serve int-keyed query strings from the persisted IVFPQ
-        index: ONE batched index serve (search_index_many — the
-        optional filters PRE-filter the pruned code and vector scans
-        via the recorded meta_cols, so statistics and shortlists are
-        drawn from the slice, never post-filtered), threshold on the
-        6dp grid exactly as the brute path (top-k first), then one
-        broadcast id join back to the store for the payload columns
-        and ONE collect for all Q envelopes."""
-        from pyspark.sql import functions as SF  # noqa: N812
-
+        index: ONE batched index serve (the optional filters
+        PRE-filter the pruned code and vector scans via the recorded
+        meta_cols, so statistics and shortlists are drawn from the
+        slice, never post-filtered), threshold on the 6dp grid exactly
+        as the brute path (top-k first), then the store's payload
+        columns for the result ids.  On the driver when the probed
+        files fit (``driver_serve.indexed_results``), else as Spark
+        plans (:meth:`_indexed_rows_spark`) — same envelopes."""
         from . import embed
-        from .operators import ann_index
 
         if not queries:
             return {}
         t0 = time.time()
         qvecs = {i: embed.embed_query_vector(q)
                  for i, q in queries.items()}
+        filters = {c: v for c, v in (("conversation_type",
+                                      conversation_type),
+                                     ("session_id", session_id))
+                   if v is not None}
+        try:
+            by_q = driver_serve.indexed_results(
+                self.spark, self.index_dir, self._store_path(), qvecs,
+                limit, threshold, filters, self.nprobe, self.shortlist)
+        except driver_serve.NotServable:
+            by_q = self._indexed_rows_spark(qvecs, limit, threshold,
+                                            conversation_type,
+                                            session_id)
+        ms = round((time.time() - t0) * 1000, 1)
+        return {i: {
+            "status": "success",
+            "results": by_q[i],
+            "metadata": {
+                "total_results": len(by_q[i]),
+                "query": q,
+                "threshold": threshold,
+                "search_time_ms": ms,
+            },
+        } for i, q in queries.items()}
+
+    def _indexed_rows_spark(self, qvecs: dict, limit: int,
+                            threshold: float,
+                            conversation_type: str | None,
+                            session_id: str | None) -> dict:
+        """:meth:`_indexed_envelopes`' rows as Spark plans: the batched
+        index serve, the threshold, one broadcast id join back to the
+        store and one collect for all Q queries."""
+        from pyspark.sql import functions as SF  # noqa: N812
+
+        from .operators import ann_index
+
         top = (ann_index.search_index_many(
             self.spark, self.index_dir, qvecs, k=limit,
             nprobe=self.nprobe, shortlist=self.shortlist,
@@ -605,27 +661,12 @@ class Engine:
                    .withColumn("similarity_score",
                                (SF.round(SF.col("sim"), 3)
                                 + SF.lit(0.0))))
-        collected = payload.collect()
-        ms = round((time.time() - t0) * 1000, 1)
-        by_q: dict[int, list] = {i: [] for i in queries}
-        for r in collected:
+        by_q: dict[int, list] = {i: [] for i in qvecs}
+        for r in payload.collect():
             d = r.asDict(recursive=True)
             by_q[d.pop("qid")].append(d)
-        out = {}
-        for i, q in queries.items():
-            rows = sorted(by_q[i],
-                          key=lambda d: (-d["sim"], d["message_id"]))
-            out[i] = {
-                "status": "success",
-                "results": rows,
-                "metadata": {
-                    "total_results": len(rows),
-                    "query": q,
-                    "threshold": threshold,
-                    "search_time_ms": ms,
-                },
-            }
-        return out
+        return {i: sorted(rows, key=lambda d: (-d["sim"], d["message_id"]))
+                for i, rows in by_q.items()}
 
     # -- 3.3 stats path ---------------------------------------------------
     def apply_retention(self, cutoff) -> dict:

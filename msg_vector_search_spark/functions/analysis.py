@@ -14,6 +14,8 @@ here is DuckDB-oracle checkable.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -47,6 +49,20 @@ def bind_once(col: Column, fn) -> Column:
 def tokens(text: Column | str) -> Column:
     """Whitespace tokenization of lowercased text -> array<string>."""
     return F.split(F.trim(F.lower(_c(text))), r"\s+")
+
+
+#: Java's ``\s``: ASCII whitespace only — Python's ``str.split()`` and
+#: ``re``'s ``\s`` also split on NBSP, thin space and the other
+#: Unicode spaces, which the index tokenizer keeps inside a token.
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def py_tokens(text: str) -> list[str]:
+    """Driver-side twin of :func:`tokens` for one string: Spark's
+    ``trim`` strips spaces only, and ``split`` keeps leading and
+    trailing empty tokens (``""`` -> ``[""]``).  Parity is pinned in
+    tests/test_driver_twins.py."""
+    return _JAVA_WS.split(text.lower().strip(" "))
 
 
 def token_hash(tok: Column) -> Column:

@@ -19,6 +19,8 @@ no VT, asserted there).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -101,6 +103,19 @@ def clean_text(text: Column | str) -> Column:
     c = F.regexp_replace(c, RE_URL, "")
     c = F.regexp_replace(c, RE_NON_TEXT, "")
     return F.trim(c)
+
+
+def py_clean_text(text: str) -> str:
+    """Driver-side twin of :func:`clean_text` for one string (a query
+    cleaned the way stored messages were): the same regexes under
+    Python's ASCII classes — Java's ``\\s`` and ``\\w`` are
+    ASCII-only, so NBSP and thin space are stripped, not collapsed —
+    then Spark's space-only ``trim``.  Parity is pinned in
+    tests/test_driver_twins.py."""
+    for pattern, repl in ((RE_WHITESPACE, " "), (RE_URL, ""),
+                          (RE_NON_TEXT, "")):
+        text = re.sub(pattern, repl, text, flags=re.ASCII)
+    return text.strip(" ")
 
 
 def duck_clean_text(expr: str) -> str:

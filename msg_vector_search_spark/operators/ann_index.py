@@ -234,10 +234,11 @@ def _read_small_parquet_rows(spark: SparkSession, path: str) -> list:
     """Rows of a sidecar parquet (nlist / m*ncodes bounded — KB-sized
     metadata, like the json sidecars) WITHOUT a Spark job: a cluster
     round trip to collect a handful of driver-destined rows is pure
-    scheduler latency (r17; each serve paid 2 such jobs).  Driver-local
-    paths read via pyarrow; remote URIs keep the Spark read — the
-    sidecar is one file either way.  Dict rows index like Row objects
-    for every consumer here (probe_cells_local, the codebook loop).
+    scheduler latency (r17; each serve paid 2 such jobs).  The files
+    are read via pyarrow (``fs.read_parquet``) on either branch; the
+    Spark read is left for a directory without parquet files.  Dict
+    rows index like Row objects for every consumer here
+    (probe_cells_local, the codebook loop).
     Parity: both paths decode the same parquet doubles, so float
     values are bit-identical."""
     from ..sources import fs
@@ -245,32 +246,20 @@ def _read_small_parquet_rows(spark: SparkSession, path: str) -> list:
     # os.listdir / FileSystem.listStatus, not glob: a store path
     # containing glob metacharacters ([, ?, *) would silently match
     # nothing, and glob would also pick up underscore-prefixed marker
-    # files a Spark read ignores (ADVICE r17)
-    import pyarrow.parquet as papq
-    if not fs.is_remote(path):
-        files = fs.list_files(spark, path, suffix=".parquet")
-        if files:
-            import pyarrow as pa
-            return pa.concat_tables(
-                [papq.read_table(fs._strip_file_scheme(f))
-                 for f in files]).to_pylist()
-        return [r.asDict() for r in spark.read.parquet(path).collect()]
-    # remote URI: stream the KB-sized sidecar files through the Hadoop
-    # FS API and decode driver-side — zero Spark jobs, same parquet
-    # doubles (r18; was a collect() job per serve — the r17 deferral).
-    # Any gateway-level surprise falls back to the Spark read, so the
-    # serve never breaks on an exotic filesystem.
+    # files a Spark read ignores (ADVICE r17).  A remote URI streams
+    # the KB-sized files through the Hadoop FS API (r18; was a
+    # collect() job per serve), and any gateway-level surprise there
+    # falls back to the Spark read, so the serve never breaks on an
+    # exotic filesystem.
+    import pyarrow as pa
     try:
         files = fs.list_files(spark, path, suffix=".parquet")
         if files:
-            import io
-
-            import pyarrow as pa
             return pa.concat_tables(
-                [papq.read_table(io.BytesIO(fs.read_bytes(spark, f)))
-                 for f in files]).to_pylist()
+                [fs.read_parquet(spark, f) for f in files]).to_pylist()
     except Exception:
-        pass
+        if not fs.is_remote(path):
+            raise
     return [r.asDict() for r in spark.read.parquet(path).collect()]
 
 

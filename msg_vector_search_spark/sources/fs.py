@@ -35,7 +35,7 @@ from __future__ import annotations
 import os
 
 __all__ = ["is_remote", "probe_dirs", "list_child_dirs", "read_bytes",
-           "list_files"]
+           "list_files", "list_sized", "read_parquet"]
 
 #: URI schemes that still resolve to the driver-local filesystem and
 #: therefore keep the free ``os`` probes.
@@ -178,6 +178,14 @@ def list_files(spark, path: str, suffix: str = "",
     same set a Spark read would consider), or ``[]`` when the
     directory is absent.  One listing RPC on the remote branch,
     ``os.listdir`` locally."""
+    return [p for p, _ in list_sized(spark, path, suffix, force_hadoop)]
+
+
+def list_sized(spark, path: str, suffix: str = "",
+               force_hadoop: bool = False) -> list:
+    """:func:`list_files` with each file's length in bytes:
+    ``[(path, size)]`` from the same single listing (the Hadoop
+    ``FileStatus`` carries the length; locally one ``stat`` each)."""
     def _keep(name: str) -> bool:
         return name.endswith(suffix) and not name.startswith(("_", "."))
 
@@ -193,15 +201,30 @@ def list_files(spark, path: str, suffix: str = "",
                 return []
             raise
         return sorted(
-            f"{path.rstrip('/')}/{st.getPath().getName()}"
+            (f"{path.rstrip('/')}/{st.getPath().getName()}", st.getLen())
             for st in statuses
             if st.isFile() and _keep(st.getPath().getName()))
     local = _strip_file_scheme(path)
     sep = "/" if _scheme(path) else os.sep
     try:
-        names = os.listdir(local)
+        entries = list(os.scandir(local))
     except (FileNotFoundError, NotADirectoryError):
         return []
     return sorted(
-        path.rstrip("/\\") + sep + n for n in names
-        if _keep(n) and os.path.isfile(os.path.join(local, n)))
+        (path.rstrip("/\\") + sep + e.name, e.stat().st_size)
+        for e in entries if _keep(e.name) and e.is_file())
+
+
+def read_parquet(spark, path: str, columns: list | None = None,
+                 force_hadoop: bool = False):
+    """ONE parquet file (optionally only *columns*) as a pyarrow Table,
+    read on the driver: a local path opens directly, a remote URI
+    streams through :func:`read_bytes` — no Spark job either way."""
+    import pyarrow.parquet as papq
+
+    if not force_hadoop and not is_remote(path):
+        return papq.read_table(_strip_file_scheme(path), columns=columns)
+    import io
+    return papq.read_table(io.BytesIO(read_bytes(spark, path,
+                                                 force_hadoop)),
+                           columns=columns)

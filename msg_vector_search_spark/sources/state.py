@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
+from . import fs as fs_probe
 
 EPOCH = dt.datetime(1970, 1, 1)
 WATERMARK_KEY = "last_processed_timestamp"
@@ -42,6 +43,23 @@ def clamp_watermark(ts: Column, as_of: Column) -> Column:
     )
 
 
+def py_clamp_watermark(ts_us: int | None, as_of_us: int) -> int | None:
+    """Driver-side twin of :func:`clamp_watermark` on Spark's internal
+    timestamps (epoch microseconds): the day intervals are exact
+    microsecond counts, and the future case lands on the ``EPOCH``
+    literal's value."""
+    from pyspark.sql.types import TimestampType
+
+    day = 86_400 * 1_000_000
+    if ts_us is None:
+        return None
+    if ts_us > as_of_us:
+        return TimestampType().toInternal(EPOCH)
+    if ts_us < as_of_us - 3650 * day:
+        return as_of_us - 30 * day
+    return ts_us
+
+
 def duck_clamp_watermark(ts: str, as_of: str) -> str:
     """DuckDB rendering of :func:`clamp_watermark` for the oracle."""
     return (
@@ -54,7 +72,11 @@ def duck_clamp_watermark(ts: str, as_of: str) -> str:
 def read_watermark(spark: SparkSession, state_dir: str,
                    as_of: dt.datetime | None = None) -> dt.datetime:
     """A7 ``watermark_read``: load + clamp the scalar watermark; missing
-    state means epoch (full scan), mirroring the reference's default 0."""
+    state means epoch (full scan), mirroring the reference's default 0.
+    A local state dir is read on the driver
+    (:func:`_read_watermark_local` — the ingest cycle and the freshness
+    gate call this once each, and the Spark read cost 1-2 jobs per
+    call); a remote one keeps the Spark read."""
     path = os.path.join(state_dir, "watermark.parquet")
     # tz-AWARE now (r14 review): a naive utcnow() literal is
     # re-interpreted by Spark in the SESSION timezone, so on any
@@ -64,6 +86,8 @@ def read_watermark(spark: SparkSession, state_dir: str,
     # the exact intended instant under every session timezone —
     # the same hazard filters.py documents for date literals.
     as_of = as_of or dt.datetime.now(dt.timezone.utc)
+    if not fs_probe.is_remote(state_dir):
+        return _read_watermark_local(path, as_of)
     try:
         df = spark.read.parquet(path)
     except Exception:
@@ -74,6 +98,36 @@ def read_watermark(spark: SparkSession, state_dir: str,
         .collect()
     )
     return row[0]["ts"] if row else EPOCH
+
+
+def _read_watermark_local(path: str, as_of: dt.datetime) -> dt.datetime:
+    """:func:`read_watermark` on a driver-local state dir: the one-row
+    file :func:`write_watermark` writes, read with pyarrow and clamped
+    by :func:`py_clamp_watermark` — the Spark read's value and type
+    (a naive datetime as ``collect`` converts it), without its jobs.
+    A missing or unreadable state reads EPOCH, as the Spark read's
+    failure does; a stranded ``._old`` is not healed here either."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import TimestampType
+
+    files = fs_probe.list_files(None, path)
+    if not files:
+        return EPOCH
+    try:
+        table = pa.concat_tables([fs_probe.read_parquet(None, f)
+                                  for f in files])
+    except (OSError, pa.ArrowInvalid):
+        return EPOCH
+    keys = table.column("key").to_pylist()
+    ts = pc.cast(table.column("ts"), pa.timestamp("us"), safe=False) \
+        .cast(pa.int64()).to_pylist()
+    for k, t in zip(keys, ts):
+        if k == WATERMARK_KEY:
+            tt = TimestampType()
+            return tt.fromInternal(py_clamp_watermark(
+                t, tt.toInternal(as_of)))
+    return EPOCH
 
 
 def write_watermark(spark: SparkSession, state_dir: str,
@@ -93,8 +147,6 @@ def write_watermark(spark: SparkSession, state_dir: str,
     reports EPOCH (full rescan), which the last-writer-wins sink makes
     safe — the same recovery the Spark overwrite's failure modes had.
     Remote state dirs keep the Spark write."""
-    from . import fs as fs_probe
-
     path = os.path.join(state_dir, "watermark.parquet")
     if fs_probe.is_remote(state_dir):
         df = spark.createDataFrame([(WATERMARK_KEY, ts)],
