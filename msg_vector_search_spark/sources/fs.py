@@ -215,16 +215,14 @@ def list_sized(spark, path: str, suffix: str = "",
         for e in entries if _keep(e.name) and e.is_file())
 
 
-def read_parquet(spark, path: str, columns: list | None = None,
-                 force_hadoop: bool = False):
+def read_parquet(spark, path: str, columns: list | None = None):
     """ONE parquet file (optionally only *columns*) as a pyarrow Table,
     read on the driver: a local path opens directly, a remote URI
     streams through :func:`read_bytes` — no Spark job either way."""
     import pyarrow.parquet as papq
 
-    if not force_hadoop and not is_remote(path):
+    if not is_remote(path):
         return papq.read_table(_strip_file_scheme(path), columns=columns)
     import io
-    return papq.read_table(io.BytesIO(read_bytes(spark, path,
-                                                 force_hadoop)),
+    return papq.read_table(io.BytesIO(read_bytes(spark, path)),
                            columns=columns)

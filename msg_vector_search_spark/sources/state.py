@@ -72,50 +72,34 @@ def duck_clamp_watermark(ts: str, as_of: str) -> str:
 def read_watermark(spark: SparkSession, state_dir: str,
                    as_of: dt.datetime | None = None) -> dt.datetime:
     """A7 ``watermark_read``: load + clamp the scalar watermark; missing
-    state means epoch (full scan), mirroring the reference's default 0.
-    A local state dir is read on the driver
-    (:func:`_read_watermark_local` — the ingest cycle and the freshness
-    gate call this once each, and the Spark read cost 1-2 jobs per
-    call); a remote one keeps the Spark read."""
-    path = os.path.join(state_dir, "watermark.parquet")
-    # tz-AWARE now (r14 review): a naive utcnow() literal is
-    # re-interpreted by Spark in the SESSION timezone, so on any
-    # non-UTC driver the clamp guards would fire on an instant offset
-    # by the zone (fresh watermarks read as "future" -> clamped to
-    # EPOCH -> silent full rescans).  An aware datetime converts to
-    # the exact intended instant under every session timezone —
-    # the same hazard filters.py documents for date literals.
-    as_of = as_of or dt.datetime.now(dt.timezone.utc)
-    if not fs_probe.is_remote(state_dir):
-        return _read_watermark_local(path, as_of)
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
-        return EPOCH
-    row = (
-        df.filter(F.col("key") == WATERMARK_KEY)
-        .select(clamp_watermark(F.col("ts"), F.lit(as_of)).alias("ts"))
-        .collect()
-    )
-    return row[0]["ts"] if row else EPOCH
+    or unreadable state means epoch (full scan), mirroring the
+    reference's default 0.
 
-
-def _read_watermark_local(path: str, as_of: dt.datetime) -> dt.datetime:
-    """:func:`read_watermark` on a driver-local state dir: the one-row
-    file :func:`write_watermark` writes, read with pyarrow and clamped
-    by :func:`py_clamp_watermark` — the Spark read's value and type
-    (a naive datetime as ``collect`` converts it), without its jobs.
-    A missing or unreadable state reads EPOCH, as the Spark read's
-    failure does; a stranded ``._old`` is not healed here either."""
+    The state is the one-row file :func:`write_watermark` writes, so it
+    is read on the driver — pyarrow through ``sources/fs.py`` (the
+    Hadoop ``FileSystem`` for a remote dir), clamped by
+    :func:`py_clamp_watermark` — with no Spark job; the ingest cycle
+    and the freshness gate each call this once, and a Spark read cost
+    1-2 jobs per call.  The value and type are what a Spark read,
+    :func:`clamp_watermark` and ``collect`` give: a naive datetime.  A
+    stranded ``._old`` is not healed here; it reads EPOCH."""
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql.types import TimestampType
 
-    files = fs_probe.list_files(None, path)
+    path = os.path.join(state_dir, "watermark.parquet")
+    # tz-AWARE now (r14 review): a naive utcnow() wall time would land
+    # on an instant offset by the driver's zone, so on any non-UTC
+    # driver the clamp guards would fire on the wrong instant (fresh
+    # watermarks read as "future" -> clamped to EPOCH -> silent full
+    # rescans).  An aware datetime converts to the exact intended
+    # instant — the same hazard filters.py documents for date literals.
+    as_of = as_of or dt.datetime.now(dt.timezone.utc)
+    files = fs_probe.list_files(spark, path)
     if not files:
         return EPOCH
     try:
-        table = pa.concat_tables([fs_probe.read_parquet(None, f)
+        table = pa.concat_tables([fs_probe.read_parquet(spark, f)
                                   for f in files])
     except (OSError, pa.ArrowInvalid):
         return EPOCH

@@ -169,6 +169,46 @@ def test_driver_serve_on_hadoop_forced_uris(served, spark, monkeypatch):
     assert all(local)
 
 
+def test_store_over_budget_falls_back_to_spark(served, spark,
+                                               monkeypatch):
+    """With the budget at exactly the index bytes a search lists, the
+    index serve fits but its result ids' store buckets do not:
+    ``store_rows`` raises after scoring and the Engine answers with the
+    Spark plan — the same envelope.  A remote store is refused before
+    any index file is listed."""
+    from msg_vector_search_spark import embed
+
+    query = "river stone ember"
+    budget = driver_serve._Budget(spark)
+    driver_serve._Ann(budget, served.index_dir,
+                      {0: embed.embed_query_vector(query)},
+                      served.nprobe, {})
+    assert budget.used > 0
+    with monkeypatch.context() as m:
+        m.setattr(driver_serve, "DRIVER_SERVE_BYTES", 0)
+        want = served.search(query, limit=10, threshold=0.0)
+    raised = []
+    store_rows = driver_serve.store_rows
+
+    def spy(*a, **kw):
+        try:
+            return store_rows(*a, **kw)
+        except driver_serve.NotServable as e:
+            raised.append(str(e))
+            raise
+
+    monkeypatch.setattr(driver_serve, "store_rows", spy)
+    monkeypatch.setattr(driver_serve, "DRIVER_SERVE_BYTES", budget.used)
+    got = served.search(query, limit=10, threshold=0.0)
+    assert len(raised) == 1 and "budget" in raised[0]
+    assert want["results"]
+    assert _canon(_strip(got)) == _canon(_strip(want))
+    with pytest.raises(driver_serve.NotServable, match="remote store"):
+        driver_serve.indexed_results(
+            spark, str(served.index_dir) + "-absent", "s3a://b/store",
+            {0: [1.0]}, 10, 0.0, {}, 3, 40)
+
+
 def test_parity_after_retention(served, both):
     """Tombstoned text postings, erased index rows and swept store
     rows: both paths drop the same expired messages."""

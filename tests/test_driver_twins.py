@@ -9,7 +9,8 @@ watermark read depend on, in the style of tests/test_hashing.py:
 * ``sparkmath.strict_log`` against ``F.log`` (``StrictMath.log``);
 * ``analysis.py_tokens`` / ``textops.py_clean_text`` against the
   Column expressions, on the whitespace Java's ``\\s`` does not match;
-* ``state.read_watermark``'s driver branch against its Spark branch.
+* ``state.read_watermark`` (a driver read) against Spark's
+  ``clamp_watermark`` on the same stored timestamps.
 """
 
 from __future__ import annotations
@@ -105,19 +106,42 @@ def test_tokens_and_clean_text_twins_match_spark(spark):
                                             "lunch\u2009time", "ok"]
 
 
-def test_read_watermark_driver_branch_matches_spark(spark, tmp_path,
-                                                    monkeypatch):
-    as_of = dt.datetime(2026, 6, 1, 12, 0, tzinfo=dt.timezone.utc)
+def test_read_watermark_matches_spark_clamp(spark, tmp_path,
+                                            monkeypatch):
+    """The driver read returns what a Spark read, ``clamp_watermark``
+    and ``collect`` give — value and type — on normal, future, ancient,
+    boundary, missing and stranded-``._old`` state, read through both ``fs``
+    branches (``file:`` URIs forced through the Hadoop branch with
+    ``fs._LOCAL_SCHEMES = ()``), and on a state file the Spark writer
+    wrote (the remote write path)."""
+    utc = dt.timezone.utc
+    as_of = dt.datetime(2026, 6, 1, 12, 0, tzinfo=utc)
     cases = {
-        "normal": dt.datetime(2026, 5, 30, 8, 15, 30, 123456),
-        "future": dt.datetime(2027, 1, 1),
-        "ancient": dt.datetime(1990, 1, 1),
+        "normal": dt.datetime(2026, 5, 30, 8, 15, 30, 123456, tzinfo=utc),
+        "future": dt.datetime(2027, 1, 1, tzinfo=utc),
+        "ancient": dt.datetime(1990, 1, 1, tzinfo=utc),
     }
+    # each guard's boundary, one microsecond either side
+    us, ten_years = dt.timedelta(microseconds=1), dt.timedelta(days=3650)
+    cases.update({"at_as_of": as_of, "past_as_of": as_of + us,
+                  "ten_years": as_of - ten_years,
+                  "past_ten_years": as_of - ten_years - us})
+    clamped = spark.createDataFrame(
+        [(n, ts) for n, ts in cases.items()], "n string, ts timestamp") \
+        .select("n", state.clamp_watermark(F.col("ts"), F.lit(as_of))
+                .alias("ts")).collect()
+    want = {r["n"]: r["ts"] for r in clamped}
+    want["missing"] = want["stranded"] = state.EPOCH
+    assert want["normal"] == cases["normal"].replace(tzinfo=None)
+    assert want["future"] == state.EPOCH
+    assert want["ancient"] == want["past_ten_years"] \
+        == dt.datetime(2026, 5, 2, 12, 0)
+    assert want["past_as_of"] == state.EPOCH
+
     dirs = {}
     for name, ts in cases.items():
-        d = tmp_path / name
-        state.write_watermark(spark, str(d), ts)
-        dirs[name] = d
+        state.write_watermark(spark, str(tmp_path / name), ts)
+        dirs[name] = tmp_path / name
     dirs["missing"] = tmp_path / "missing"
     stranded = tmp_path / "stranded"
     state.write_watermark(spark, str(stranded), cases["normal"])
@@ -125,15 +149,17 @@ def test_read_watermark_driver_branch_matches_spark(spark, tmp_path,
         stranded / "watermark.parquet._old")
     dirs["stranded"] = stranded
 
-    driver = {n: state.read_watermark(spark, f"file:{d}", as_of)
-              for n, d in dirs.items()}
-    monkeypatch.setattr(fs, "_LOCAL_SCHEMES", ())
-    remote = {n: state.read_watermark(spark, f"file:{d}", as_of)
-              for n, d in dirs.items()}
-    assert driver == remote
-    assert {n: type(v) for n, v in driver.items()} == \
-        {n: type(v) for n, v in remote.items()}
-    assert driver["normal"] == cases["normal"]
-    assert driver["future"] == state.EPOCH
-    assert driver["ancient"] == dt.datetime(2026, 5, 2, 12, 0)
-    assert driver["missing"] == driver["stranded"] == state.EPOCH
+    def read_all(uri):
+        return {n: (type(v), v) for n, v in (
+            (n, state.read_watermark(spark, uri(d), as_of))
+            for n, d in dirs.items())}
+
+    typed = {n: (type(v), v) for n, v in want.items()}
+    assert read_all(str) == typed
+    with monkeypatch.context() as m:
+        m.setattr(fs, "_LOCAL_SCHEMES", ())
+        assert read_all(lambda d: f"file:{d}") == typed
+        spark_written = f"file:{tmp_path / 'spark_written'}"
+        state.write_watermark(spark, spark_written, cases["normal"])
+        got = state.read_watermark(spark, spark_written, as_of)
+    assert (type(got), got) == typed["normal"]
