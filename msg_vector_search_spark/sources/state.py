@@ -88,8 +88,8 @@ def read_watermark(spark: SparkSession, state_dir: str,
     from pyspark.sql.types import TimestampType
 
     path = os.path.join(state_dir, "watermark.parquet")
-    # tz-AWARE now (r14 review): a naive utcnow() wall time would land
-    # on an instant offset by the driver's zone, so on any non-UTC
+    # tz-AWARE now: a naive utcnow() wall time would land on an
+    # instant offset by the driver's zone, so on any non-UTC
     # driver the clamp guards would fire on the wrong instant (fresh
     # watermarks read as "future" -> clamped to EPOCH -> silent full
     # rescans).  An aware datetime converts to the exact intended
